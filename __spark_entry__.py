@@ -32,36 +32,14 @@ GOLDEN_GLOB = os.path.join(REPO, "tests", "golden", "*.json")
 
 # --- extraction queries ------------------------------------------------------
 
-# Input-corpus staging memo (r7 optimization round): the fixture / synth /
-# workspace docs tables are deterministic INPUTS, re-staged identically by
-# several driver queries (fixture docs: 6 consumers; the 120-doc synth
-# corpus: 3). Staging them through the driver (createDataFrame pickles
-# ~8 MB of JSON payloads per call) measured setup, not the operator under
-# test — the same reason bench.py caches its synthetic corpus on disk and
-# streaming._STAGED memoizes the replay chunks. Memoized per session; the
-# staging cost lands inside the first timed query that uses each corpus,
-# and every query still computes its full pipeline from the staged input.
-_INPUT_CACHE: dict = {}
-
-
-def _memo_docs(spark: SparkSession, name: str, build) -> DataFrame:
-    from t2p_spark.session import session_key
-
-    key = (session_key(spark), name)
-    hit = _INPUT_CACHE.get(key)
-    if hit is None:
-        hit = build().cache()
-        _INPUT_CACHE[key] = hit
-    return hit
-
-
 def _fixture_docs(spark: SparkSession) -> DataFrame:
     from t2p_spark.fixtures import fixture_doc_rows
     from t2p_spark.schema import DOCS_SCHEMA
+    from t2p_spark.session import stage
 
-    return _memo_docs(spark, "fixture", lambda: spark.createDataFrame(
+    return stage(spark, "fixture", lambda: spark.createDataFrame(
         list(fixture_doc_rows(chunk_size=1 << 20)), schema=DOCS_SCHEMA
-    ))
+    ).cache())
 
 
 def _synth_docs(spark: SparkSession) -> DataFrame:
@@ -71,6 +49,7 @@ def _synth_docs(spark: SparkSession) -> DataFrame:
     and tools/make_corpus.py use; the previous driver-side corpus_rows
     loop + createDataFrame pickled ~22 MB of span payloads through py4j
     (~2.5 s of the extract_synth_corpus cold time, measured r7)."""
+    from t2p_spark.session import stage
 
     def build() -> DataFrame:
         import pyarrow as pa
@@ -100,18 +79,19 @@ def _synth_docs(spark: SparkSession) -> DataFrame:
         return spark.range(120).mapInArrow(
             gen,
             "doc_id string, spans array<struct<kind:string,text:string,"
-            "media_ref:string,offset:int>>")
+            "media_ref:string,offset:int>>").cache()
 
-    return _memo_docs(spark, "synth120", build)
+    return stage(spark, "synth120", build)
 
 
 def _fixture_media(spark: SparkSession) -> DataFrame:
     """The fixture media table (fake-codec blobs), staged once: three
     multimodal queries each re-ran the encode kernel over the same docs."""
     from t2p_spark.multimodal import media_table_from_docs
+    from t2p_spark.session import stage
 
-    return _memo_docs(spark, "fixture_media",
-                      lambda: media_table_from_docs(_fixture_docs(spark)))
+    return stage(spark, "fixture_media", lambda: media_table_from_docs(
+        _fixture_docs(spark)).cache())
 
 
 def _synth_extracted(spark: SparkSession) -> DataFrame:
@@ -122,9 +102,10 @@ def _synth_extracted(spark: SparkSession) -> DataFrame:
     materialize-once schedule as the curation stages. quarantine_oversize
     extracts under its own cap and stays a full independent run."""
     from t2p_spark.pipeline import extract
+    from t2p_spark.session import stage
 
-    return _memo_docs(spark, "synth120_extracted",
-                      lambda: extract(_synth_docs(spark), parallelism=4))
+    return stage(spark, "synth120_extracted", lambda: extract(
+        _synth_docs(spark), parallelism=4).cache())
 
 
 def extract_fixture_spans(spark: SparkSession, sf_dir: str = "") -> DataFrame:
@@ -150,9 +131,6 @@ def extract_fixture_spans(spark: SparkSession, sf_dir: str = "") -> DataFrame:
     )
 
 
-REFERENCE_METS = "/root/reference/tests/workspace/mets.xml"
-
-
 def extract_workspace_spans(spark: SparkSession, sf_dir: str = "") -> DataFrame:
     """METS-workspace source through the full pipeline: the reference's own
     corpus entry point (tests/workspace/mets.xml, resolved the way
@@ -163,17 +141,19 @@ def extract_workspace_spans(spark: SparkSession, sf_dir: str = "") -> DataFrame:
     must be indistinguishable from the fixtures source."""
     import pyspark.sql.functions as F
 
-    from t2p_spark.fixtures import fixture_ids, golden_meta
+    from t2p_spark.fixtures import REFERENCE_DIR, fixture_ids, golden_meta
     from t2p_spark.pipeline import extract
+    from t2p_spark.session import stage
     from t2p_spark.workspace import docs_from_workspace
 
     def _build():
         dims = {d: (golden_meta(d)["width"], golden_meta(d)["height"])
                 for d in fixture_ids()}
-        return docs_from_workspace(spark, REFERENCE_METS, dims=dims,
-                                   chunk_size=1 << 20)
+        mets = os.path.join(REFERENCE_DIR, "tests", "workspace", "mets.xml")
+        return docs_from_workspace(spark, mets, dims=dims,
+                                   chunk_size=1 << 20).cache()
 
-    docs = _memo_docs(spark, "workspace", _build)
+    docs = stage(spark, "workspace", _build)
     out = extract(docs, parallelism=4)
     return out.select(
         "doc_id", F.explode("spans").alias("s")

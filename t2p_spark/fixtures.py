@@ -14,7 +14,11 @@ import os
 from typing import Dict, Iterator, List, Optional, Tuple
 
 GOLDEN_DIR = os.path.join(os.path.dirname(__file__), "..", "tests", "golden")
-REF_JSON_DIR = "/root/reference/tests/workspace/textract_responses"
+# The reference converter's checkout: its Textract inputs, mets.xml and
+# reference PAGE-XMLs are read from here and nowhere else.
+REFERENCE_DIR = "/root/reference"
+REF_JSON_DIR = os.path.join(REFERENCE_DIR, "tests", "workspace",
+                            "textract_responses")
 
 
 def doc_row(doc_id: str, json_text: str, width: int, height: int,

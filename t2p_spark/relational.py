@@ -400,36 +400,24 @@ def _est_scan_partitions(spark: SparkSession, path: str) -> int:
     return max(1, (total + split - 1) // split)
 
 
-_REGISTERED: dict = {}
-# Bumped each time a session's views are (re)registered; downstream
-# materialized caches (textkit.documents_tok, ann's vector cache) key on
-# (session, generation) so swapping sf_dir can never serve a stale cache.
-VIEW_GENERATION: dict = {}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register the star-schema tables as temp views (idempotent per session).
+    """Register the star-schema tables as temp views: the ``views`` stage,
+    keyed on sf_dir (t2p_spark.session.stage), so repeated calls for one
+    sf_dir are free and any sf_dir change — an A -> B -> A swap included —
+    re-registers and invalidates every stage derived from the views.
 
     LOCAL MODE ONLY: single-file local tables scan as ONE partition, which
     serializes every downstream stage; a real deployment has thousands of
     splits, so the blind repartition would be a pure waste of a shuffle
     there — the gate keeps the registration path cluster-shaped. Results
     are unaffected either way (queries here are order-insensitive).
-
-    Registration is cached per (session, sf_dir): the bench loop calls every
-    query through here, and re-reading + repartitioning ten tables per query
-    measures setup, not the query.
     """
-    from t2p_spark.session import session_key
+    from t2p_spark.session import stage
 
-    skey = session_key(spark)
-    # Idempotency keys on the LAST-registered sf_dir for the session, not
-    # on (session, sf_dir): temp views are named, so an A -> B -> A swap
-    # leaves the views pointing at B while a (session, A) cache hit would
-    # skip re-registration — silently computing over the wrong dataset
-    # (r3 ADVICE). Any sf_dir change re-registers and bumps the generation.
-    if _REGISTERED.get(skey) == sf_dir:
-        return
+    stage(spark, "views", lambda: _register(spark, sf_dir), key=sf_dir)
+
+
+def _register(spark: SparkSession, sf_dir: str) -> None:
     par = spark.sparkContext.defaultParallelism
     is_local = spark.sparkContext.master.startswith("local")
 
@@ -451,8 +439,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     with ThreadPoolExecutor(max_workers=min(8, len(TABLES))) as pool:
         for t, df in pool.map(_load, TABLES):
             df.createOrReplaceTempView(t)
-    _REGISTERED[skey] = sf_dir
-    VIEW_GENERATION[skey] = VIEW_GENERATION.get(skey, 0) + 1
 
 
 def run_relational(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

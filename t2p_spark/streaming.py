@@ -180,9 +180,6 @@ def run_sessionize_stream(spark: SparkSession, events_path: str,
     )
 
 
-_STAGED: dict = {}
-
-
 def _stage_chronological_chunks(spark: SparkSession, sf_dir: str,
                                 n_chunks: int = 4):
     """Stage the events table as n_chunks chronologically-disjoint parquet
@@ -190,30 +187,36 @@ def _stage_chronological_chunks(spark: SparkSession, sf_dir: str,
     modification time) — a faithful replay of how a landing zone receives
     history, and the precondition for stream==batch equality: the stateful
     gap fold assumes batches arrive in time order, and the watermark drops
-    data arriving >2h late. Returns (dir, schema); memoized per
-    (session, sf_dir) — the staged replay of an immutable table is itself
+    data arriving >2h late. Returns (dir, schema); a stage keyed on
+    (sf_dir, n_chunks) — the staged replay of an immutable table is itself
     immutable, and both streamed driver queries share it."""
+    from t2p_spark.session import stage
+
+    return stage(spark, "events_chunks",
+                 lambda: _write_chunks(
+                     spark.read.parquet(f"{sf_dir}/events.parquet"),
+                     ["ts", "event_id"], "t2p_events_stream_", n_chunks),
+                 key=(sf_dir, n_chunks))
+
+
+def _write_chunks(df: DataFrame, order: list, prefix: str, n_chunks: int):
+    """Write df as n_chunks parquet files in ``order``, oldest first by
+    mtime; returns (dir, schema)."""
     import tempfile
 
     from pyspark.sql import Window
 
-    from t2p_spark.session import session_key
-
-    key = (session_key(spark), sf_dir, n_chunks)
-    if key in _STAGED:
-        return _STAGED[key]
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    out_dir = tempfile.mkdtemp(prefix="t2p_events_stream_")
-    rn = F.row_number().over(Window.orderBy("ts", "event_id"))
+    out_dir = tempfile.mkdtemp(prefix=prefix)
+    rn = F.row_number().over(Window.orderBy(*order))
     # cache the ranked relation: each chunk write filters it, and without
-    # the cache every write re-runs the global (ts, event_id) sort —
-    # n_chunks full sorts for one staging pass (r7 optimization round)
-    chunked = ev.withColumn("_rn", rn).cache()
+    # the cache every write re-runs the global sort — n_chunks full sorts
+    # for one staging pass (r7 optimization round)
+    chunked = df.withColumn("_rn", rn).cache()
     n = chunked.count()
     per = (n + n_chunks - 1) // n_chunks
     # FileStreamSource orders files by mtime at ms resolution: two chunk
     # writes landing in the same millisecond could replay out of order and
-    # break the time-order precondition above (the 2h watermark would then
+    # break the events replay's time order (the 2h watermark would then
     # drop rows — an intermittent oracle flake, r3 ADVICE). Pin each
     # chunk's part-file mtime explicitly in chunk order.
     pinned: set = set()
@@ -228,8 +231,7 @@ def _stage_chronological_chunks(spark: SparkSession, sf_dir: str,
                 os.utime(os.path.join(out_dir, f), (t, t))
                 pinned.add(f)
     chunked.unpersist()
-    _STAGED[key] = (out_dir, ev.schema)
-    return _STAGED[key]
+    return out_dir, df.schema
 
 
 class _stream_shuffle_partitions:
@@ -433,33 +435,16 @@ def _stage_document_chunks(spark: SparkSession, sf_dir: str,
                            n_chunks: int = 3):
     """Stage the 'incoming' documents slice (doc_id % 4 == 0) as n_chunks
     parquet files written in doc_id order — the landing-zone replay for
-    the stream-static near-dup screen. Memoized per (session, sf_dir),
-    like the events staging."""
-    import tempfile
+    the stream-static near-dup screen. A stage keyed on (sf_dir,
+    n_chunks), like the events staging."""
+    from t2p_spark.session import stage
 
-    from pyspark.sql import Window
-
-    from t2p_spark.session import session_key
-
-    key = (session_key(spark), sf_dir, "docs", n_chunks)
-    if key in _STAGED:
-        return _STAGED[key]
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .where("doc_id % 4 = 0"))
-    out_dir = tempfile.mkdtemp(prefix="t2p_docs_stream_")
-    rn = F.row_number().over(Window.orderBy("doc_id"))
-    # cached for the same reason as the events staging: one sort, n_chunks
-    # cheap filtered writes
-    chunked = docs.withColumn("_rn", rn).cache()
-    n = chunked.count()
-    per = (n + n_chunks - 1) // n_chunks
-    for i in range(n_chunks):
-        (chunked
-         .filter((F.col("_rn") > i * per) & (F.col("_rn") <= (i + 1) * per))
-         .drop("_rn").coalesce(1).write.mode("append").parquet(out_dir))
-    chunked.unpersist()
-    _STAGED[key] = (out_dir, docs.schema)
-    return _STAGED[key]
+    return stage(spark, "doc_chunks",
+                 lambda: _write_chunks(
+                     spark.read.parquet(f"{sf_dir}/documents.parquet")
+                     .where("doc_id % 4 = 0"),
+                     ["doc_id"], "t2p_docs_stream_", n_chunks),
+                 key=(sf_dir, n_chunks))
 
 
 def _band_key_array(col_fmt: str, n_minhash: int) -> str:

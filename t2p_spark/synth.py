@@ -424,8 +424,7 @@ def row_for_index(i: int, seed: int = 42,
     """The i-th corpus row — a pure function of (i, seed), so corpus
     generation distributes over the cluster (tools/make_corpus.py runs it
     inside mapInArrow; an undistributable generator is useless at target
-    scale)."""
-    fixtures = _load_fixtures()
+    scale). Only ``mut-*`` rows read the reference fixtures."""
     doc_seed = seed * 1_000_003 + i
     r = (i * 2654435761) % 1000 / 1000.0  # deterministic mix selector
     if r < quarantine_ratio:
@@ -435,7 +434,8 @@ def row_for_index(i: int, seed: int = 42,
         doc_id = f"skew-{i:08d}"
         aws, w, h, ref = generate_skew_doc(doc_id, doc_seed,
                                            n_lines=2000 + (i % 3) * 2000)
-    elif r < quarantine_ratio + skew_ratio + 0.125 and fixtures:
+    elif r < quarantine_ratio + skew_ratio + 0.125 and _load_fixtures():
+        fixtures = _load_fixtures()
         src, meta = fixtures[i % len(fixtures)]
         doc_id = f"mut-{i:08d}"
         aws = mutate_fixture(src, doc_seed)

@@ -113,7 +113,6 @@ def _wide(expr: str, engine: str) -> str:
 N_MINHASH = 8  # bands = n/2 (2 rows per band)
 SIMHASH_BITS = 60       # fixed: fits signed BIGINT
 SIMHASH_BANDS = 4       # band_bits = 60/bands; hamming_max = bands-1
-SIMHASH_BAND_BITS = SIMHASH_BITS // SIMHASH_BANDS
 HAMMING_MAX = 3         # <= bands-1 differing bits guarantees a shared band
 # Shingles appearing in more documents than this are dropped before the
 # Jaccard inverted-index self-join: one hot shingle ("in the of the")
@@ -1729,48 +1728,17 @@ def duckdb_oracle_queries(**presets) -> dict:
     return _build("d", **presets)
 
 
-_TOK_CACHE: dict = {}
-# Bumped whenever documents_tok is actually (re)built for a session. Every
-# derived materialized relation (sigs_mat, pairs_mat, simhash_mat, tok_mat,
-# cc_mat, the curation stages) keys on it, so a swapped ``documents`` view
-# (register_views generation bump, or a test's force rebuild) can never
-# serve a stale derived cache.
-_TOK_EPOCH: dict = {}
-
-
-def _tok_epoch(spark: SparkSession) -> int:
-    from t2p_spark.session import session_key
-
-    return _TOK_EPOCH.get(session_key(spark), 0)
-
-
 def _ensure_cached_view(spark: SparkSession, view: str, build,
                         extra_key: tuple = ()) -> DataFrame:
-    """Build + cache + register a derived relation ONCE per documents_tok
-    build (r7 optimization round). The cached DataFrame is the local
-    stand-in for the materialized stage table a cluster-scale run persists
-    (the documents_tok / cur_stages pattern): the signature table, the LSH
-    candidate-pair table and the simhash/shingle projections are all
-    written once and read by every consumer in production, so re-deriving
-    them inside every query measured setup, not the operator. Keyed by
-    (view, session, tok-epoch, extra); the build cost lands inside the
-    first timed query that needs the relation."""
-    from t2p_spark.session import session_key
+    """The ``view`` stage over documents_tok (t2p_spark.session.stage):
+    build() cached once per documents_tok build and ``extra_key`` preset,
+    registered as the temp view ``view`` — re-pointed on a hit too, since
+    a test may have replaced the view."""
+    from t2p_spark.session import stage
 
-    skey = session_key(spark)
-    key = ("view", view, skey, _TOK_EPOCH.get(skey, 0), tuple(extra_key))
-    hit = _TOK_CACHE.get(key)
-    if hit is not None:
-        # re-point the name: a test may have replaced the temp view
-        hit.createOrReplaceTempView(view)
-        return hit
-    for stale in [k for k in _TOK_CACHE
-                  if isinstance(k, tuple) and k[:2] == ("view", view)
-                  and k[2] == skey]:
-        _TOK_CACHE.pop(stale).unpersist()
-    df = build().cache()
+    df = stage(spark, view, lambda: build().cache(),
+               inputs=("documents_tok",), key=tuple(extra_key))
     df.createOrReplaceTempView(view)
-    _TOK_CACHE[key] = df
     return df
 
 
@@ -1781,30 +1749,20 @@ def ensure_documents_tok(spark: SparkSession, force: bool = False) -> None:
     every array-lambda element access downstream — the regex split then
     reruns once per shingle/bit access (measured 10-30x blowup at sf0.1).
     The cached view is small (tokens ~= text size) and every textkit query
-    reuses it. Keyed by (session lifetime, view generation): the session
-    key survives id() reuse after GC, and the generation bumps whenever
-    register_views swaps the ``documents`` view (new sf_dir), so a stale
-    documents_tok can never be served silently (r2 ADVICE). force=True
-    still rebuilds unconditionally.
+    reuses it. A stage on ``views``: rebuilt whenever register_views swaps
+    the ``documents`` view; force=True rebuilds unconditionally (tests
+    that replace the ``documents`` view directly).
     """
-    from t2p_spark.relational import VIEW_GENERATION
-    from t2p_spark.session import session_key
+    from t2p_spark.session import drop, stage
 
-    skey = session_key(spark)
-    key = (skey, VIEW_GENERATION.get(skey, 0))
-    if not force and key in _TOK_CACHE:
-        return
-    for stale in [k for k in _TOK_CACHE if k[0] == skey]:
-        _TOK_CACHE.pop(stale).unpersist()
-    df = spark.sql(
+    if force:
+        drop(spark, "documents_tok")
+    stage(spark, "documents_tok", lambda: spark.sql(
         "SELECT doc_id, source, n_chars, text, "
         f"{_tokens('text', 's')} AS toks, "
         f"{_xform(_tokens('text', 's'), 't -> ' + _hash60('t', 's'), 's')}"
         " AS thashes FROM documents"
-    ).cache()
-    df.createOrReplaceTempView("documents_tok")
-    _TOK_CACHE[key] = df
-    _TOK_EPOCH[skey] = _TOK_EPOCH.get(skey, 0) + 1
+    ).cache(), inputs=("views",)).createOrReplaceTempView("documents_tok")
 
 
 def lsh_pairs_build_sql(n_minhash: int = None) -> str:
@@ -1885,9 +1843,9 @@ def ensure_minhash_sigs(spark: SparkSession,
 def ensure_lsh_pairs(spark: SparkSession, n_minhash: int = None) -> None:
     """Materialize sigs_mat plus the banded LSH candidate pairs
     (pairs_mat) once per corpus — the signature table and candidate-pair
-    table a production dedup pipeline writes as stage outputs. Keyed on
-    the documents_tok epoch (plus the n_minhash preset), so a swapped
-    corpus or preset rebuilds both."""
+    table a production dedup pipeline writes as stage outputs. Stages on
+    documents_tok keyed by the n_minhash preset, so a swapped corpus or
+    preset rebuilds both."""
     n_mh = N_MINHASH if n_minhash is None else n_minhash
     ensure_minhash_sigs(spark, n_minhash)
     _ensure_cached_view(
@@ -2117,26 +2075,21 @@ def materialize_curation_stages(spark: SparkSession) -> None:
     """Materialize+cache each curation gate's output as its own relation —
     the incremental schedule of a 100-TB curation run, where every gate is
     a separate job writing a table and the funnel report only joins those
-    tables. Memoized per (session, documents_tok epoch) so repeated funnel
-    reports reuse the materialized stages — and any corpus swap (generation
-    bump OR a test's force rebuild) invalidates them; the local cache
-    stands in for the stage tables a cluster run would persist. The CC
-    labels (cc_mat) are derived here once for the keep-list stage build —
-    NOT per funnel report."""
-    from t2p_spark.session import session_key
+    tables. One ``curation_stages`` stage over documents_tok, so repeated
+    funnel reports reuse the materialized gates and any corpus swap
+    rebuilds them. The CC labels (cc_mat) are derived here once for the
+    keep-list stage build — NOT per funnel report."""
+    from t2p_spark.session import stage
 
     ensure_documents_tok(spark)
-    skey = session_key(spark)
-    key = ("cur_stages", skey, _TOK_EPOCH.get(skey, 0))
-    if key in _TOK_CACHE:
-        return
-    # evict only THIS session's old-generation stage caches — another
-    # live session's cached stages stay persisted (r5 ADVICE)
-    for stale in [k for k in _TOK_CACHE
-                  if isinstance(k, tuple) and k[0] == "cur_stages"
-                  and k[1] == skey]:
-        for df in _TOK_CACHE.pop(stale):
-            df.unpersist()
+    mats = stage(spark, "curation_stages",
+                 lambda: _build_curation_stages(spark),
+                 inputs=("documents_tok",))
+    for (view, _qname), df in zip(_CURATION_STAGES, mats):
+        df.createOrReplaceTempView(view)
+
+
+def _build_curation_stages(spark: SparkSession) -> list:
     # The gate builds are independent jobs; only the keep-list stage
     # depends on the CC labels. Submit the four CC-independent gates from
     # a small driver thread pool WHILE the CC resolution runs on this
@@ -2160,12 +2113,7 @@ def materialize_curation_stages(spark: SparkSession) -> None:
     keepl = spark.sql(sqls["dedup_keep_list"]).cache()
     keepl.count()
     mats_by_view["keepl_mat"] = keepl
-    mats = []
-    for view, _qname in _CURATION_STAGES:
-        df = mats_by_view[view]
-        df.createOrReplaceTempView(view)
-        mats.append(df)
-    _TOK_CACHE[key] = mats
+    return [mats_by_view[view] for view, _qname in _CURATION_STAGES]
 
 
 def prepare_textkit_views(spark: SparkSession, name: str,
@@ -2186,7 +2134,7 @@ def prepare_textkit_views(spark: SparkSession, name: str,
         # funnel) reads the materialized shingle arrays
         ensure_csh3(spark)
     elif name in ("simhash_clusters", "simhash_neardup_pairs"):
-        # cached + memoized per corpus epoch: the banded self-join reads
+        # a stage on documents_tok: the banded self-join reads
         # this relation twice, the 60-bit vote fold is the expensive part,
         # and both simhash queries share one build
         _ensure_cached_view(

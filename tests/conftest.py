@@ -8,8 +8,9 @@ import pytest
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from t2p_spark.fixtures import REF_JSON_DIR  # noqa: E402
+
 GOLDEN_DIR = os.path.join(REPO, "tests", "golden")
-REF_JSON_DIR = "/root/reference/tests/workspace/textract_responses"
 
 FIXTURE_IDS = sorted(
     os.path.basename(p)[:-5] for p in glob.glob(os.path.join(GOLDEN_DIR, "*.json"))

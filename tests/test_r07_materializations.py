@@ -30,7 +30,7 @@ def _near_dup_rows(tag, n=6):
 
 
 def test_pairs_and_cc_rebuild_on_corpus_swap(spark):
-    """A swapped ``documents`` view (epoch bump via force rebuild) must
+    """A swapped ``documents`` view (documents_tok rebuilt by force) must
     invalidate sigs/pairs/cc: serving corpus A's pairs against corpus B
     would be silent corruption."""
     try:
@@ -103,3 +103,52 @@ def test_tokcap_preset_rebuilds_per_cap(spark):
         assert n_capped < n_default, (n_capped, n_default)
     finally:
         _restore(spark)
+
+
+def test_rebuilt_stage_unpersists_what_it_replaces(spark):
+    """A stage rebuild (corpus swap, preset change) must release the
+    DataFrames it replaces — a stale cached corpus otherwise stays pinned
+    in executor memory for the rest of the session."""
+    from t2p_spark.session import drop, stage
+
+    try:
+        _docs(spark, _near_dup_rows("ddd"))
+        sigs_a = textkit.ensure_minhash_sigs(spark)
+        assert sigs_a.is_cached
+        assert textkit.ensure_minhash_sigs(spark) is sigs_a  # a hit
+        _docs(spark, _near_dup_rows("eee"))
+        sigs_b = textkit.ensure_minhash_sigs(spark)
+        assert sigs_b is not sigs_a
+        assert sigs_b.is_cached and not sigs_a.is_cached
+
+        # list values (several relations owned by one stage) and drop()
+        pair = stage(spark, "probe_pair",
+                     lambda: [spark.range(3).cache(), spark.range(4).cache()],
+                     key=1)
+        newer = stage(spark, "probe_pair", lambda: [spark.range(5).cache()],
+                      key=2)
+        assert not any(df.is_cached for df in pair)
+        drop(spark, "probe_pair")
+        assert not newer[0].is_cached
+    finally:
+        _restore(spark)
+
+
+def test_new_session_never_sees_another_sessions_stage(spark):
+    """Stages are keyed per session lifetime (session_key): a
+    ``newSession()`` shares the SparkContext but not its temp views, so
+    it must build its own entry, never receive the parent's."""
+    from t2p_spark.session import drop, generation, stage
+
+    other = spark.newSession()
+    try:
+        assert stage(spark, "probe_owner", lambda: "parent") == "parent"
+        assert generation(other, "probe_owner") == 0
+        assert stage(other, "probe_owner", lambda: "child") == "child"
+        assert stage(spark, "probe_owner", lambda: "again") == "parent"
+        drop(other, "probe_owner")
+        assert stage(spark, "probe_owner", lambda: "again") == "parent"
+        assert generation(spark, "probe_owner") == 1
+    finally:
+        drop(spark, "probe_owner")
+        drop(other, "probe_owner")

@@ -2,18 +2,21 @@
 fixtures, plus the Spark surface and the single-file CLI."""
 
 import json
+import os
 import subprocess
 import sys
 
 import pytest
 
+from t2p_spark.fixtures import REFERENCE_DIR
 from t2p_spark.flatten import flatten_page_xml, page_dims
 from t2p_spark.render_xml import (
     canonical_form, canonical_md5, render_page_xml,
 )
 from tests.conftest import FIXTURE_IDS, REF_JSON_DIR, load_textract_json
 
-REF_XML_DIR = "/root/reference/tests/workspace/reference_page_xml"
+REF_XML_DIR = os.path.join(REFERENCE_DIR, "tests", "workspace",
+                           "reference_page_xml")
 
 
 def _ref_xml(doc_id: str) -> str:

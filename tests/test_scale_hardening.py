@@ -26,17 +26,12 @@ def _swap_documents_view(spark, rows):
 
 def _restore_views(spark):
     # drop the synthetic views so later tests re-register the real tables
-    from t2p_spark import relational
+    from t2p_spark.session import drop
 
-    from t2p_spark.session import session_key
-
-    skey = session_key(spark)
-    relational._REGISTERED.pop(skey, None)
-    for k in [k for k in textkit._TOK_CACHE
-              if (isinstance(k, tuple) and skey in k)]:
-        df = textkit._TOK_CACHE.pop(k)
-        for d in (df if isinstance(df, list) else [df]):
-            d.unpersist()
+    for name in ("views", "documents_tok", "simhash_mat", "tok_mat",
+                 "tokcap_mat", "sigs_mat", "pairs_mat", "csh3_mat",
+                 "cc_mat", "curation_stages"):
+        drop(spark, name)
     for v in ("documents", "documents_tok", "docsh_mat", "simhash_mat",
               "tok_mat", "tokcap_mat", "sigs_mat", "pairs_mat", "csh3_mat",
               "cf_mat", "rep_mat", "cont_mat", "keepl_mat",
@@ -318,9 +313,8 @@ def test_multiprobe_recall_beats_single_probe(spark):
     recall is 0 for every probe strategy — hence the planted corpus.)"""
     import random
 
-    from t2p_spark import relational
     from t2p_spark.ann import DIM, TOP_K, ann_sql
-    from t2p_spark.session import session_key
+    from t2p_spark.session import drop
 
     rng = random.Random(7)
 
@@ -366,8 +360,7 @@ def test_multiprobe_recall_beats_single_probe(spark):
         assert r_tables > r_single, (r_single, r_tables)
     finally:
         spark.catalog.dropTempView("embeddings")
-        skey = session_key(spark)
-        relational._REGISTERED.pop(skey, None)
+        drop(spark, "views")
 
 
 def test_textkit_presets_keep_twin_parity(spark):
@@ -536,10 +529,9 @@ def test_rolling_7d_linear_over_three_years(spark):
         }
         assert got == want
     finally:
-        from t2p_spark import relational
-        from t2p_spark.session import session_key
+        from t2p_spark.session import drop
 
-        relational._REGISTERED.pop(session_key(spark), None)
+        drop(spark, "views")
         spark.catalog.dropTempView("events")
 
 
@@ -747,26 +739,25 @@ def test_register_views_sf_swap_not_stale(spark):
     views pointing at B while the memo claimed A. The fix keys on the
     session's LAST sf_dir; each swap must serve the right tables and bump
     the cache generation."""
-    from t2p_spark import relational
-    from t2p_spark.relational import VIEW_GENERATION, register_views
-    from t2p_spark.session import session_key
+    from t2p_spark.relational import register_views
+    from t2p_spark.session import drop, generation
 
     a, b = "/root/testdata/sf0.001", "/root/testdata/sf0.01"
     try:
         register_views(spark, a)
         n_a = spark.table("orders").count()
-        gen0 = VIEW_GENERATION[session_key(spark)]
+        gen0 = generation(spark, "views")
         register_views(spark, b)
         n_b = spark.table("orders").count()
         assert n_b != n_a  # different scale factors
         register_views(spark, a)  # the A->B->A swap
         assert spark.table("orders").count() == n_a
-        assert VIEW_GENERATION[session_key(spark)] == gen0 + 2
+        assert generation(spark, "views") == gen0 + 2
         # same-dir re-registration stays memoized (no generation bump)
         register_views(spark, a)
-        assert VIEW_GENERATION[session_key(spark)] == gen0 + 2
+        assert generation(spark, "views") == gen0 + 2
     finally:
-        relational._REGISTERED.pop(session_key(spark), None)
+        drop(spark, "views")
 
 
 def test_shard_manifest_invariant_to_parallelism(spark):

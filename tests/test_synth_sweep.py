@@ -78,3 +78,22 @@ def test_intentional_bad_docs_quarantined(sweep):
     for doc_id, _ in rows:
         if doc_id.startswith("bad-"):
             assert got[doc_id]["status"] == "quarantined", doc_id
+
+
+def test_generated_rows_need_no_reference(tmp_path, monkeypatch):
+    """gen-, skew- and bad- rows are pure functions of (i, seed) and build
+    without the reference fixtures; a mut- row still needs them and fails
+    loudly, so a mutant is never silently replaced by a generated doc.
+    Indices per the row_for_index mix selector: 0 bad, 1 gen, 25 skew,
+    4 mut."""
+    from t2p_spark import fixtures, synth
+    from t2p_spark.synth import row_for_index
+
+    monkeypatch.setattr(fixtures, "REF_JSON_DIR", str(tmp_path / "missing"))
+    monkeypatch.setattr(synth, "_FIXTURE_CACHE", None)
+    for i, prefix in ((0, "bad-"), (1, "gen-"), (25, "skew-")):
+        doc_id, spans = row_for_index(i)
+        assert doc_id.startswith(prefix), (i, doc_id)
+        assert spans[0][0] == "media"
+    with pytest.raises(FileNotFoundError):
+        row_for_index(4)

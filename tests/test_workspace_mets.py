@@ -15,9 +15,11 @@ Pure-Python module: no Spark session needed.
 import os
 
 from t2p_spark import workspace
-from t2p_spark.fixtures import fixture_doc_rows, fixture_ids, golden_meta
+from t2p_spark.fixtures import (
+    REFERENCE_DIR, fixture_doc_rows, fixture_ids, golden_meta,
+)
 
-METS = "/root/reference/tests/workspace/mets.xml"
+METS = os.path.join(REFERENCE_DIR, "tests", "workspace", "mets.xml")
 WS = os.path.dirname(METS)
 
 

@@ -17,9 +17,11 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
+from t2p_spark.fixtures import REFERENCE_DIR  # noqa: E402
 from t2p_spark.flatten import flatten_page_xml, page_dims  # noqa: E402
 
-REF_XML_DIR = "/root/reference/tests/workspace/reference_page_xml"
+REF_XML_DIR = os.path.join(REFERENCE_DIR, "tests", "workspace",
+                           "reference_page_xml")
 OUT_DIR = os.path.join(os.path.dirname(__file__), "..", "tests", "golden")
 
 

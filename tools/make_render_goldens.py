@@ -20,9 +20,11 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
+from t2p_spark.fixtures import REFERENCE_DIR  # noqa: E402
 from t2p_spark.render_xml import canonical_md5  # noqa: E402
 
-REF_XML_DIR = "/root/reference/tests/workspace/reference_page_xml"
+REF_XML_DIR = os.path.join(REFERENCE_DIR, "tests", "workspace",
+                           "reference_page_xml")
 OUT_PATH = os.path.join(os.path.dirname(__file__), "..", "tests",
                         "golden_render", "render_canon_md5.json")
 SYNTH_OUT_PATH = os.path.join(os.path.dirname(__file__), "..", "tests",
