@@ -165,8 +165,8 @@ def main() -> int:
         n_buckets=args.n_buckets,
         resume=args.resume,
     )
-    # the returned metrics DataFrame is local-backed (collected once inside
-    # run_extract_job) — summarizing it launches no further output scans
+    # the returned metrics DataFrame is a local relation built from Arrow
+    # inside run_extract_job: summarizing it scans no output, runs no Python
     agg = metrics.agg(
         F.coalesce(F.sum("n_docs"), F.lit(0)).alias("docs"),
         F.coalesce(F.sum("n_ok"), F.lit(0)).alias("ok"),

@@ -31,15 +31,44 @@ def completed_buckets(spark: SparkSession, metrics_path: str) -> List[int]:
     return [r["bucket"] for r in m.select("bucket").distinct().collect()]
 
 
+def _is_local(path: str) -> bool:
+    return path.startswith("/") or path.startswith("file:")
+
+
 def _exists(spark: SparkSession, path: str) -> bool:
     # local-fs fast path; on hdfs/s3 rely on the read attempt
-    if path.startswith("/") or path.startswith("file:"):
+    if _is_local(path):
         return os.path.exists(path.replace("file:", "", 1))
     try:
         spark.read.parquet(path).limit(0).collect()
         return True
     except Exception:
         return False
+
+
+_DISCOVERY_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet``, listing a local table on the driver.
+
+    Past ``parallelPartitionDiscovery.threshold`` (32) subdirectories Spark
+    lists a table with a distributed job of one task per directory; on a
+    local path that job costs more than the listing itself (a 64-bucket
+    table: ~1 CPU-s per read). The override covers only this read; remote
+    paths keep Spark's behaviour.
+    """
+    if not _is_local(path):
+        return spark.read.parquet(path)
+    prev = spark.conf.get(_DISCOVERY_THRESHOLD, None)
+    spark.conf.set(_DISCOVERY_THRESHOLD, str(2**31 - 1))
+    try:
+        return spark.read.parquet(path)
+    finally:
+        if prev is None:
+            spark.conf.unset(_DISCOVERY_THRESHOLD)
+        else:
+            spark.conf.set(_DISCOVERY_THRESHOLD, prev)
 
 
 def run_extract_job(
@@ -57,7 +86,7 @@ def run_extract_job(
     Returns the metrics DataFrame of the buckets processed in this run.
     """
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    docs = spark.read.parquet(input_path)
+    docs = _read_parquet(spark, input_path)
 
     # a bucket-partitioned input (FIXTURES.md §1 layout) gives real partition
     # pruning on resume AND a shuffle-free clustered write
@@ -110,7 +139,7 @@ def run_extract_job(
     if lineage["format"] == "iceberg":
         written = spark.table(lineage["table"])
     else:
-        written = spark.read.parquet(output_path)
+        written = _read_parquet(spark, output_path)
     if done:
         written = written.filter(~F.col("bucket").isin(done))
     metrics = (
@@ -120,12 +149,11 @@ def run_extract_job(
         .withColumn("snapshot_id",
                     F.lit(lineage["snapshot_id"]).cast("long"))
     )
-    # ONE pass over the durable output (pruned to scalar columns): collect
-    # the tiny per-bucket result, then append it driver-side and return a
-    # local-backed DataFrame — callers summarizing it trigger no further
-    # scans of the output (this re-scan was part of the measured serial
-    # share keeping full-job scaling below the 0.8 bar).
-    rows = metrics.collect()
-    mdf = spark.createDataFrame(rows, metrics.schema)
+    # ONE pass over the durable output (pruned to scalar columns): the tiny
+    # per-bucket result comes back as Arrow and becomes a driver-held local
+    # relation. Appending it and the caller's collect() then rescan nothing
+    # and start no Python workers (rows built from a Python list would be
+    # a pickled RDD, unpickled by workers on every action).
+    mdf = spark.createDataFrame(metrics.toArrow(), metrics.schema)
     mdf.coalesce(1).write.mode("append").parquet(metrics_path)
     return mdf

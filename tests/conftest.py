@@ -32,6 +32,28 @@ def load_textract_text(doc_id: str) -> str:
         return f.read()
 
 
+@pytest.fixture
+def synth_docs(spark):
+    """``synth_docs(n)``: a reference-free DOCS_SCHEMA frame of n generated
+    pages, every eighth one a quarantine doc, each payload in one span."""
+    from t2p_spark.fixtures import doc_row
+    from t2p_spark.schema import DOCS_SCHEMA
+    from t2p_spark.synth import generate_doc, generate_quarantine_doc
+
+    def make(n_docs: int):
+        rows = []
+        for i in range(n_docs):
+            bad = i % 8 == 7
+            doc_id = f"{'bad' if bad else 'gen'}-{i:04d}"
+            gen = generate_quarantine_doc if bad else generate_doc
+            aws, w, h, ref = gen(doc_id, 1000 + i)
+            rows.append(doc_row(doc_id, json.dumps(aws), w, h, ref,
+                                chunk_size=1 << 20))
+        return spark.createDataFrame(rows, schema=DOCS_SCHEMA)
+
+    return make
+
+
 @pytest.fixture(scope="session")
 def spark():
     from pyspark.sql import SparkSession

@@ -5,10 +5,24 @@ import os
 import shutil
 
 import pyspark.sql.functions as F
+import pytest
+from pyspark.errors import AnalysisException
+from pyspark.sql import types as T
 
 from t2p_spark.checkpoint import run_extract_job
-from t2p_spark.fixtures import fixture_doc_rows
-from t2p_spark.schema import DOCS_SCHEMA
+
+THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+# the metrics table as appended: parquet stores every column nullable
+METRICS_TABLE_SCHEMA = T.StructType(
+    [T.StructField("bucket", T.IntegerType())]
+    + [T.StructField(c, T.LongType()) for c in (
+        "n_docs", "n_ok", "n_quarantined", "n_blocks", "n_spans",
+        "span_checksum")]
+    + [T.StructField("run_id", T.StringType()),
+       T.StructField("sink_format", T.StringType()),
+       T.StructField("snapshot_id", T.LongType())]
+)
 
 
 def _bucket_metrics(spark, path):
@@ -18,10 +32,8 @@ def _bucket_metrics(spark, path):
     }
 
 
-def test_exact_resume_after_partial_failure(spark, tmp_path):
-    docs = spark.createDataFrame(
-        list(fixture_doc_rows(chunk_size=1 << 20)), schema=DOCS_SCHEMA
-    )
+def test_exact_resume_after_partial_failure(spark, tmp_path, synth_docs):
+    docs = synth_docs(24)
     inp = str(tmp_path / "docs")
     docs.repartition(4).write.parquet(inp)
 
@@ -58,3 +70,63 @@ def test_exact_resume_after_partial_failure(spark, tmp_path):
     metrics2 = run_extract_job(spark, inp, out2, m2, run_id="r3",
                                parallelism=2, n_buckets=8, resume=True)
     assert metrics2.count() == 0
+
+
+def test_returned_metrics_are_a_local_relation(spark, tmp_path, synth_docs):
+    inp = str(tmp_path / "docs")
+    synth_docs(16).write.parquet(inp)
+    out, mets = str(tmp_path / "out"), str(tmp_path / "m")
+    metrics = run_extract_job(spark, inp, out, mets, run_id="r1",
+                              parallelism=2, n_buckets=8)
+    rows = sorted(metrics.collect())
+    assert spark.read.parquet(mets).schema == METRICS_TABLE_SCHEMA
+    assert (metrics._jdf.queryExecution().optimizedPlan()
+            .getClass().getSimpleName()) == "LocalRelation"
+
+    # the rows live on the driver: neither the output nor the metrics
+    # table is read again
+    shutil.rmtree(out)
+    shutil.rmtree(mets)
+    assert sorted(metrics.collect()) == rows
+
+
+def test_local_tables_are_listed_on_the_driver(spark, tmp_path, synth_docs):
+    inp = str(tmp_path / "docs")
+    synth_docs(96).withColumn(
+        "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(64)).cast("int")
+    ).write.partitionBy("bucket").parquet(inp)
+    n_dirs = len(glob.glob(os.path.join(inp, "bucket=*")))
+    # past Spark's default threshold (32) and the caller's value below
+    assert n_dirs > 48
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    spark.conf.set(THRESHOLD, "48")
+    try:
+        sc.setJobGroup("t2p-driver-listing", "run_extract_job")
+        try:
+            run_extract_job(spark, inp, str(tmp_path / "out"),
+                            str(tmp_path / "m"), run_id="r1", n_buckets=64)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert spark.conf.get(THRESHOLD) == "48"
+        tasks = [
+            tracker.getStageInfo(s).numTasks
+            for j in tracker.getJobIdsForGroup("t2p-driver-listing")
+            for s in tracker.getJobInfo(j).stageIds
+        ]
+        assert tasks and n_dirs not in tasks
+
+        with pytest.raises(AnalysisException):
+            run_extract_job(spark, str(tmp_path / "missing"),
+                            str(tmp_path / "out2"), str(tmp_path / "m2"),
+                            run_id="r2", n_buckets=64)
+        assert spark.conf.get(THRESHOLD) == "48"
+    finally:
+        spark.conf.unset(THRESHOLD)
+
+    with pytest.raises(AnalysisException):
+        run_extract_job(spark, str(tmp_path / "missing"),
+                        str(tmp_path / "out3"), str(tmp_path / "m3"),
+                        run_id="r3", n_buckets=64)
+    assert spark.conf.get(THRESHOLD, None) is None

@@ -240,18 +240,15 @@ def test_kernel_reenables_gc():
     assert gc.isenabled()
 
 
-def test_resume_rejects_mismatched_bucket_layout(spark, tmp_path):
+def test_resume_rejects_mismatched_bucket_layout(spark, tmp_path, synth_docs):
     """A clustered input whose stored bucket column disagrees with
     --n-buckets must fail fast on a pruning resume — silently applying the
     done-list to a differently-bucketed input would skip documents."""
     import pyspark.sql.functions as F
 
     from t2p_spark.checkpoint import run_extract_job
-    from t2p_spark.fixtures import fixture_doc_rows
 
-    docs = spark.createDataFrame(
-        list(fixture_doc_rows(chunk_size=1 << 20)), schema=DOCS_SCHEMA
-    )
+    docs = synth_docs(24)
     in_path = str(tmp_path / "docs")
     # cluster the input with 8 buckets
     docs.withColumn(
